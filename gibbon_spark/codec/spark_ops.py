@@ -3,11 +3,14 @@
 The storage unit matches the reference: one compressed block per
 (series, 2-hour bucket) — exactly Gorilla's per-series block keyed by
 header time (``vec_stream.rs:6-9``, ``csv_to_packed.rs:16-18``). Encode
-is an ``applyInPandas`` over that grouping (one shuffle, the same
-partitioning the bucketed store and per-series windows use); decode is
-an ``applyInPandas`` back to rows. Blocks are independent, so both
-sides scale embarrassingly: 100 TB = many blocks, never a big one
-(2 h × one series).
+is a ``mapInPandas`` over partitions shuffled and sorted by that key
+(one shuffle, the same partitioning the bucketed store and per-series
+windows use); decode is a ``mapInPandas`` back to rows, with no
+shuffle. Both sides work on whole Arrow batches of blocks with numpy:
+``encode_blocks_vectorized`` packs every block of a batch in one pass,
+and ``decode_blocks_vectorized`` decodes the blocks of a batch in
+lockstep. Blocks are independent, so both sides scale embarrassingly:
+100 TB = many blocks, never a big one (2 h × one series).
 
 The codec module is shipped to executors BY VALUE via cloudpickle's
 ``register_pickle_by_value`` — executors need no importable copy of
@@ -31,10 +34,9 @@ def _ship_codec_by_value() -> None:
 
     try:
         from pyspark.cloudpickle import register_pickle_by_value
-
-        register_pickle_by_value(gorilla_mod)
-    except Exception:  # pragma: no cover - older cloudpickle
-        pass
+    except ImportError:  # pragma: no cover - older cloudpickle
+        return
+    register_pickle_by_value(gorilla_mod)
 
 
 def encode_timeseries(
@@ -144,30 +146,62 @@ def encode_timeseries(
 
 
 def decode_timeseries(blocks: DataFrame) -> DataFrame:
-    """gorilla blocks → (series_id, ts epoch-seconds, value) rows."""
-    _ship_codec_by_value()
-    from gibbon_spark.codec.gorilla import decode_block
+    """gorilla blocks → (series_id, ts epoch-seconds, value) rows.
 
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    Each Arrow batch is decoded in one of two ways, chosen from the
+    batch itself: blocks in lockstep (``decode_blocks_vectorized``, one
+    numpy step per record of the longest block) when
+    ``sum(n_samples) >= LOCKSTEP_MIN_WIDTH * max(n_samples)``, else the
+    scalar ``decode_block`` per block. Every block must decode to
+    exactly ``n_samples`` records ending exactly at ``n_bits``; any
+    mismatch raises instead of returning a partial block."""
+    _ship_codec_by_value()
+    from gibbon_spark.codec.gorilla import (
+        LOCKSTEP_MIN_WIDTH,
+        decode_block,
+        decode_blocks_vectorized,
+    )
+
+    def decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        import numpy as np
         import pandas as pd
 
-        # flat accumulators, one DataFrame per Arrow batch — a per-block
-        # DataFrame+concat costs ~1 ms x thousands of tiny blocks
-        sids: list = []
-        tss: list = []
-        vals: list = []
-        for r in pdf.itertuples(index=False):
-            ts_list, v_list = decode_block(
-                bytes(r.payload), int(r.n_bits), int(r.header_time)
+        payloads = pdf["payload"].tolist()
+        nbits = pdf["n_bits"].to_numpy(dtype=np.int64)
+        header_times = pdf["header_time"].to_numpy(dtype=np.int64)
+        n_samples = pdf["n_samples"].to_numpy(dtype=np.int64)
+        if len(pdf) and n_samples.sum() >= LOCKSTEP_MIN_WIDTH * n_samples.max():
+            ts, values = decode_blocks_vectorized(
+                payloads, nbits, header_times, n_samples
             )
-            sids.extend([r.series_id] * len(ts_list))
-            tss.extend(ts_list)
-            vals.extend(v_list)
-        return pd.DataFrame({"series_id": sids, "ts": tss, "value": vals})
+        else:
+            ts_parts, v_parts = [], []
+            for k, (payload, nb, ht, n) in enumerate(
+                zip(payloads, nbits.tolist(), header_times.tolist(), n_samples.tolist())
+            ):
+                # decode_block ends exactly at n_bits or raises, so the
+                # record count is the one check left to make
+                ts_k, v_k = decode_block(payload, nb, ht)
+                if len(ts_k) != n:
+                    raise ValueError(
+                        f"block {k}: n_bits holds {len(ts_k)} records, "
+                        f"n_samples says {n}"
+                    )
+                ts_parts += ts_k
+                v_parts += v_k
+            ts = np.array(ts_parts, dtype=np.uint64).view(np.int64)
+            values = np.array(v_parts, dtype=np.float64)
+        return pd.DataFrame(
+            {
+                "series_id": np.repeat(pdf["series_id"].to_numpy(), n_samples),
+                "ts": ts,
+                "value": values,
+            }
+        )
 
     # mapInPandas keeps decode embarrassingly parallel (no shuffle)
     return blocks.mapInPandas(
-        lambda it: (decode_group(pdf) for pdf in it), ROWS_SCHEMA
+        lambda it: (decode_batch(pdf) for pdf in it), ROWS_SCHEMA
     )
 
 

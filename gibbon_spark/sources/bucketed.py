@@ -142,6 +142,7 @@ def read_bucketed(
 
 
 DAY = 86400
+BLOCK = 7200  # one Gorilla block: 2 hours of one series
 
 
 def write_gorilla_store(
@@ -201,11 +202,14 @@ def read_gorilla_store(
     ``bucket_day`` partition filter never lists pruned day directories,
     and the exact ``header_time`` predicate lands on parquet row-group
     stats (files are written sorted by header_time) — together strictly
-    the reference's block skipping. Returns the block frame ready for
-    codec/spark_ops.decode_timeseries."""
+    the reference's block skipping. A block's header_time is the 2-hour
+    floor of every point in it (codec/spark_ops.encode_timeseries), so
+    the first block needed is the one at the floor of ``start_epoch``.
+    Returns the block frame ready for codec/spark_ops.decode_timeseries;
+    its rows may still reach outside [start_epoch, end_epoch)."""
     df = spark.read.parquet(path)
     if start_epoch is not None:
-        lo = int(start_epoch) - 7200
+        lo = int(start_epoch) - int(start_epoch) % BLOCK
         df = df.filter(F.col("bucket_day") >= lo - lo % DAY)
         df = df.filter(F.col("header_time") >= lo)
     if end_epoch is not None:

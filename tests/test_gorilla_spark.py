@@ -93,3 +93,51 @@ def test_encode_deterministic_under_subsecond_epoch_ties(spark):
         )
 
     assert payloads(fwd) == payloads(rev)
+
+
+def _blocks_frame(spark, n_blocks: int, partitions: int):
+    """``n_blocks`` locally encoded blocks of unequal length as a block
+    frame in ``partitions`` partitions, plus the expected rows."""
+    import numpy as np
+
+    from gibbon_spark.codec.gorilla import encode_block
+
+    rng = np.random.default_rng(n_blocks)
+    header = 1_704_067_200
+    rows, want = [], []
+    for b in range(n_blocks):
+        n = 30 if b % 5 else 1 + b % 7
+        ts = (header + 3 + 10 * np.arange(n) + rng.integers(0, 2, n)).tolist()
+        vs = np.round(rng.normal(50, 5, n), 1).tolist()
+        payload, nbits = encode_block(ts, vs, header)
+        rows.append((f"s{b}", header, n, nbits, bytearray(payload)))
+        want += [(f"s{b}", t, v) for t, v in zip(ts, vs)]
+    df = spark.sparkContext.parallelize(rows, partitions).toDF(spark_ops.BLOCK_SCHEMA)
+    return df, sorted(want)
+
+
+def test_decode_identical_on_each_side_of_the_lockstep_threshold(spark):
+    from gibbon_spark.codec.gorilla import LOCKSTEP_MIN_WIDTH
+
+    n_blocks = 3 * LOCKSTEP_MIN_WIDTH
+    # one partition: a single Arrow batch whose sum(n_samples) is well
+    # over LOCKSTEP_MIN_WIDTH x max -> lockstep; one block per partition
+    # -> every batch is below it -> the scalar decoder
+    lockstep, want = _blocks_frame(spark, n_blocks, 1)
+    scalar, _ = _blocks_frame(spark, n_blocks, n_blocks)
+    for df in (lockstep, scalar):
+        got = sorted(map(tuple, spark_ops.decode_timeseries(df).collect()))
+        assert got == want
+
+
+@pytest.mark.parametrize("partitions", [1, 200])
+def test_decode_fails_loudly_on_a_wrong_n_samples(spark, partitions):
+    df, _ = _blocks_frame(spark, 200, partitions)
+    bad = df.withColumn(
+        "n_samples",
+        F.when(F.col("series_id") == "s7", F.col("n_samples") + 1).otherwise(
+            F.col("n_samples")
+        ),
+    )
+    with pytest.raises(Exception, match="n_samples says"):
+        spark_ops.decode_timeseries(bad).collect()

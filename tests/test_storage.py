@@ -148,9 +148,7 @@ def test_gorilla_store_range_read_prunes_day_dirs(spark, block_store):
     ranged = bucketed.read_gorilla_store(
         spark, block_store, start_epoch=lo, end_epoch=hi
     )
-    expected = full.filter(
-        (F.col("header_time") >= lo - 7200) & (F.col("header_time") < hi)
-    )
+    expected = full.filter((F.col("header_time") >= lo) & (F.col("header_time") < hi))
     assert sorted(map(tuple, ranged.collect())) == sorted(
         map(tuple, expected.collect())
     )
@@ -181,3 +179,23 @@ def test_expire_buckets_retention(spark, store):
     left = spark.read.parquet(path)
     assert left.count() > 0
     assert left.agg(F.min("bucket")).collect()[0][0].isoformat(sep=" ") >= cutoff
+
+
+@pytest.mark.parametrize("offset", [0, 3000])
+def test_gorilla_store_start_prunes_to_the_block_floor(spark, block_store, offset):
+    """A range read keeps only blocks from the 2-hour floor of its start,
+    and returns the same rows as an unpruned read plus a filter, whether
+    the start is block-aligned or not."""
+    from gibbon_spark.codec import spark_ops
+
+    lo, hi = 1704844800 + offset, 1704844800 + 6 * 3600 + 1234
+    in_range = (F.col("ts") >= lo) & (F.col("ts") < hi)
+    ranged = bucketed.read_gorilla_store(spark, block_store, start_epoch=lo, end_epoch=hi)
+    full = bucketed.read_gorilla_store(spark, block_store)
+    floor = lo - lo % 7200
+    kept = full.filter((F.col("header_time") >= floor) & (F.col("header_time") < hi))
+    assert sorted(map(tuple, ranged.collect())) == sorted(map(tuple, kept.collect()))
+    got = spark_ops.decode_timeseries(ranged).filter(in_range)
+    want = spark_ops.decode_timeseries(full).filter(in_range)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got.count() > 0

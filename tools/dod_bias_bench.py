@@ -5,9 +5,11 @@ that the resulting number is always a non-negative number ... makes it
 fast to encode and decode without branching"; its earlier sign-dependent
 version "took about twice as long to decode". That 2x figure is for
 native code, where a data-dependent branch stalls the pipeline. This
-tool quantifies the same design choice inside OUR hot path — the
-big-int-cursor Python decode of `codec/gorilla.py::decode_block` — by
-timing two dod-only mini-codecs over the identical dod sequence:
+tool quantifies the same design choice inside our scalar decoder — the
+big-int-cursor Python loop of `codec/gorilla.py::decode_block`, which
+decodes single blocks and small batches (large batches go through the
+lockstep `decode_blocks_vectorized`, where the bias is a table entry) —
+by timing two dod-only mini-codecs over the identical dod sequence:
 
 - **biased** (shipped design, `timestamp_stream.rs:47-57` semantics):
   the field stores ``dod + bias`` as an unsigned number; decode is one
