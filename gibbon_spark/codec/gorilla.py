@@ -5,7 +5,7 @@ Format spec (documented from reference behavior; no code ported):
 
 Timestamps (``src/timestamp_stream.rs:29-67``):
 - first record: 14-bit unsigned delta from a 2-hour-aligned header time
-  (delta must be in [0, 2^14]);
+  (delta must be in [0, 2^14), the range of the 14-bit field);
 - then delta-of-delta buckets: ``0`` if dod == 0; ``10`` + 7 bits
   (dod+63) for dod in [-63, 64]; ``110`` + 9 bits (dod+255) for
   [-255, 256]; ``1110`` + 12 bits (dod+2047) for [-2047, 2048]; else
@@ -142,9 +142,9 @@ class TimestampEncoder:
     def push(self, ts: int, w: BitWriter) -> None:
         if self.prev is None:
             delta = ts - self.header_time
-            if not (0 <= delta <= (1 << 14)):
+            if not (0 <= delta < (1 << 14)):
                 raise ValueError(
-                    f"first delta {delta} outside [0, 2^14] — header_time "
+                    f"first delta {delta} outside [0, 2^14) — header_time "
                     "must be the 2h-aligned floor of the first timestamp"
                 )
             w.write(delta, 14)
@@ -441,10 +441,11 @@ def encode_blocks_vectorized(epochs, values, header_times, is_start):
     delta[1:] = epochs[1:] - epochs[:-1]
     delta[is_start] = epochs[is_start] - header_times[is_start]
     first_delta = delta[start_idx]
-    if ((first_delta < 0) | (first_delta > (1 << 14))).any():
-        bad = first_delta[(first_delta < 0) | (first_delta > (1 << 14))][0]
+    out_of_field = (first_delta < 0) | (first_delta >= (1 << 14))
+    if out_of_field.any():
+        bad = first_delta[out_of_field][0]
         raise ValueError(
-            f"first delta {bad} outside [0, 2^14] — header_time "
+            f"first delta {bad} outside [0, 2^14) — header_time "
             "must be the 2h-aligned floor of the first timestamp"
         )
     dod = np.zeros(n, dtype=np.int64)

@@ -12,9 +12,16 @@ and ``decode_blocks_vectorized`` decodes the blocks of a batch in
 lockstep. Blocks are independent, so both sides scale embarrassingly:
 100 TB = many blocks, never a big one (2 h × one series).
 
-The codec module is shipped to executors BY VALUE via cloudpickle's
-``register_pickle_by_value`` — executors need no importable copy of
-gibbon_spark.
+The codec modules (``gorilla`` and ``worker_imports``) are shipped to
+executors BY VALUE via cloudpickle's ``register_pickle_by_value`` —
+executors need no importable copy of gibbon_spark.
+
+Both partition functions first call ``lazy_zip_invalidation``: Spark's
+Python worker runs ``importlib.invalidate_caches()`` at the start of
+every task, which on Python 3.10/3.11 eagerly re-reads every zip archive
+on the worker's ``sys.path`` (~0.2 s a task, more than a one-block point
+read decodes in). After the first codec task on a worker, that call
+only drops the cached directories, as on 3.12+.
 """
 
 from __future__ import annotations
@@ -31,12 +38,14 @@ ROWS_SCHEMA = "series_id string, ts long, value double"
 
 def _ship_codec_by_value() -> None:
     import gibbon_spark.codec.gorilla as gorilla_mod
+    import gibbon_spark.codec.worker_imports as worker_imports_mod
 
     try:
         from pyspark.cloudpickle import register_pickle_by_value
     except ImportError:  # pragma: no cover - older cloudpickle
         return
     register_pickle_by_value(gorilla_mod)
+    register_pickle_by_value(worker_imports_mod)
 
 
 def encode_timeseries(
@@ -52,6 +61,7 @@ def encode_timeseries(
     (SURVEY.md 'hard parts')."""
     _ship_codec_by_value()
     from gibbon_spark.codec.gorilla import encode_blocks_vectorized
+    from gibbon_spark.codec.worker_imports import lazy_zip_invalidation
     from gibbon_spark.operators.timeseries import as_timeseries
 
     norm = as_timeseries(df, series=series, ts=ts, value=value)
@@ -96,6 +106,7 @@ def encode_timeseries(
     )
 
     def encode_partition(batches):
+        lazy_zip_invalidation()
         import numpy as np
         import pandas as pd
 
@@ -161,6 +172,7 @@ def decode_timeseries(blocks: DataFrame) -> DataFrame:
         decode_block,
         decode_blocks_vectorized,
     )
+    from gibbon_spark.codec.worker_imports import lazy_zip_invalidation
 
     def decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -199,10 +211,13 @@ def decode_timeseries(blocks: DataFrame) -> DataFrame:
             }
         )
 
+    def decode_partition(batches):
+        lazy_zip_invalidation()
+        for pdf in batches:
+            yield decode_batch(pdf)
+
     # mapInPandas keeps decode embarrassingly parallel (no shuffle)
-    return blocks.mapInPandas(
-        lambda it: (decode_batch(pdf) for pdf in it), ROWS_SCHEMA
-    )
+    return blocks.mapInPandas(decode_partition, ROWS_SCHEMA)
 
 
 def compression_report(blocks: DataFrame) -> DataFrame:

@@ -18,13 +18,13 @@ from pyspark.sql.types import DoubleType, LongType
 # cloudpickle would otherwise serialize them by reference and executors
 # would need gibbon_spark importable (not guaranteed under the driver).
 try:  # pragma: no cover
+    from pyspark.cloudpickle import register_pickle_by_value as _rpbv
+except ImportError:  # pragma: no cover - older cloudpickle
+    pass
+else:
     import sys as _sys
 
-    from pyspark.cloudpickle import register_pickle_by_value as _rpbv
-
     _rpbv(_sys.modules[__name__])
-except Exception:  # noqa: BLE001
-    pass
 
 
 @F.pandas_udf(LongType())

@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gibbon_spark.codec.spark_ops import BLOCK_SCHEMA
 from gibbon_spark.operators.timeseries import as_timeseries, with_bucket
 
 BUCKET_WIDTH = "2 hours"
@@ -143,6 +144,7 @@ def read_bucketed(
 
 DAY = 86400
 BLOCK = 7200  # one Gorilla block: 2 hours of one series
+STORE_SCHEMA = f"{BLOCK_SCHEMA}, bucket_day long"
 
 
 def write_gorilla_store(
@@ -206,8 +208,14 @@ def read_gorilla_store(
     floor of every point in it (codec/spark_ops.encode_timeseries), so
     the first block needed is the one at the floor of ``start_epoch``.
     Returns the block frame ready for codec/spark_ops.decode_timeseries;
-    its rows may still reach outside [start_epoch, end_epoch)."""
-    df = spark.read.parquet(path)
+    its rows may still reach outside [start_epoch, end_epoch).
+
+    The store's schema is declared (``BLOCK_SCHEMA`` plus the
+    ``bucket_day`` partition column), not inferred, which saves the
+    footer-reading Spark job of parquet schema inference on every read.
+    A missing ``path`` still raises ``PATH_NOT_FOUND``; a directory
+    with no data files reads as 0 blocks."""
+    df = spark.read.schema(STORE_SCHEMA).parquet(path)
     if start_epoch is not None:
         lo = int(start_epoch) - int(start_epoch) % BLOCK
         df = df.filter(F.col("bucket_day") >= lo - lo % DAY)

@@ -18,6 +18,7 @@ from gibbon_spark.codec.gorilla import (
     decode_block,
     decode_blocks_vectorized,
     encode_block,
+    encode_blocks_vectorized,
 )
 
 HEADER = 1_600_000_000 - 1_600_000_000 % 7200
@@ -227,3 +228,21 @@ def test_malformed_window_header_raises_in_both_decoders():
         decode_block(payload, nbits, HEADER)
     with pytest.raises(ValueError):
         decode_blocks_vectorized([payload], [nbits], [HEADER], [2])
+
+
+def test_first_delta_must_fit_the_14_bit_field():
+    # 2^14 would be stored as 0 by the 14-bit field: both encoders refuse
+    # it, and the largest delta that fits round-trips through both decoders
+    for delta in (1 << 14, -1):
+        with pytest.raises(ValueError, match=r"outside \[0, 2\^14\)"):
+            encode_block([HEADER + delta], [1.0], HEADER)
+        with pytest.raises(ValueError, match=r"outside \[0, 2\^14\)"):
+            encode_blocks_vectorized([HEADER + delta], [1.0], [HEADER], [True])
+    ts, vs = [HEADER + (1 << 14) - 1, HEADER + (1 << 14) + 59], [1.5, 2.5]
+    payloads, nbits, starts = encode_blocks_vectorized(
+        ts, vs, [HEADER, HEADER], [True, False]
+    )
+    assert starts.tolist() == [0]
+    assert (payloads[0], nbits[0]) == encode_block(ts, vs, HEADER)
+    assert decode_block(payloads[0], int(nbits[0]), HEADER) == (ts, vs)
+    _assert_lockstep_matches_scalar([(ts, vs, HEADER)])

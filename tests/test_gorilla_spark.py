@@ -141,3 +141,47 @@ def test_decode_fails_loudly_on_a_wrong_n_samples(spark, partitions):
     )
     with pytest.raises(Exception, match="n_samples says"):
         spark_ops.decode_timeseries(bad).collect()
+
+
+def test_codec_tasks_skip_the_per_task_zip_reread(spark):
+    """Spark's worker calls importlib.invalidate_caches() at the start of
+    every task; once a codec task has applied lazy_zip_invalidation, that
+    call no longer re-reads the zip archives on the worker's sys.path
+    (pyspark.zip, the spark-core jar), and decode output is unchanged."""
+    from gibbon_spark.codec.worker_imports import lazy_zip_invalidation
+
+    spark_ops._ship_codec_by_value()
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        lazy_zip_invalidation()
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"zips": [zips], "reads": [len(reads)]})
+
+    got = spark.range(2, numPartitions=2).mapInPandas(probe, "zips long, reads long")
+    for row in got.collect():
+        assert row.zips > 0 and row.reads == 0
+    df, want = _blocks_frame(spark, 8, 4)
+    assert sorted(map(tuple, spark_ops.decode_timeseries(df).collect())) == want

@@ -199,3 +199,22 @@ def test_gorilla_store_start_prunes_to_the_block_floor(spark, block_store, offse
     want = spark_ops.decode_timeseries(full).filter(in_range)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     assert got.count() > 0
+
+
+def test_gorilla_store_read_uses_the_declared_schema(spark, block_store, tmp_path):
+    """read_gorilla_store declares the store schema instead of inferring
+    it: the same rows as an inferred read, a missing path still fails,
+    and a store directory with no data files reads as 0 blocks."""
+    from pyspark.errors import AnalysisException
+
+    declared = bucketed.read_gorilla_store(spark, block_store)
+    inferred = spark.read.parquet(block_store).select(*declared.columns)
+    assert declared.schema == inferred.schema
+    assert sorted(map(tuple, declared.collect())) == sorted(
+        map(tuple, inferred.collect())
+    )
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        bucketed.read_gorilla_store(spark, str(tmp_path / "missing"))
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert bucketed.read_gorilla_store(spark, str(empty)).count() == 0
